@@ -89,9 +89,23 @@ object GramHash {
     }
   }
 
-  /** Null-tolerant entry point used by both eval and generated code. */
-  def hashesOrNull(toks: ArrayData, n: Int, mod: Int, distinct: Boolean): ArrayData =
-    if (toks == null) null else hashes(toks, n, mod, distinct)
+  /** Dense bucket counts of a bucket-index array (the hashing-TF vector
+    * over [[hashes]]' n = 1, mod = dim output): counts[i] = how many
+    * elements equal i, for i in [0, dim). Null and out-of-range elements
+    * are not counted. Behind [[graft.plans.BucketCountsExpr]]. */
+  def bucketCounts(idx: ArrayData, dim: Int): ArrayData = {
+    val counts = new Array[Double](dim)
+    val n = idx.numElements()
+    var j = 0
+    while (j < n) {
+      if (!idx.isNullAt(j)) {
+        val v = idx.getLong(j)
+        if (v >= 0L && v < dim) counts(v.toInt) += 1.0
+      }
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(counts)
+  }
 
   private def finish(out: Array[Any], len: Int, anyNull: Boolean,
       distinct: Boolean): ArrayData = {

@@ -4,8 +4,10 @@ import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Row-local kernels behind the LSH signature expressions
-  * ([[graft.plans.XxHashArrExpr]] / [[graft.plans.MinHashSigExpr]]),
-  * replacing two per-row boundaries in the MinHash-LSH skeleton:
+  * ([[graft.plans.XxHashArrExpr]] / [[graft.plans.MinHashSigExpr]]) and
+  * the candidate-pair verification ([[graft.plans.JaccardSortedExpr]]).
+  * The signature kernels replace two per-row boundaries in the
+  * MinHash-LSH skeleton:
   *
   *  - `[sort_array(]transform(sh, s => xxhash64(s))[)]` — an interpreted
   *    lambda per shingle, each hop converting through the expression
@@ -45,13 +47,14 @@ object LshHash {
   /** MinHash signature: for each of `numHashes` remix functions, the
     * minimum over the input hashes — the exact loop of the retired
     * `minHashFromBase` UDF (same constants, same order; an empty input
-    * leaves every slot at Long.MaxValue, as before). */
+    * leaves every slot at Long.MaxValue, as before; a null element reads
+    * as 0, as the UDF's unboxing did). */
   def minhashSig(hs: ArrayData, numHashes: Int): ArrayData = {
     val mins = Array.fill(numHashes)(Long.MaxValue)
     val n = hs.numElements()
     var x = 0
     while (x < n) {
-      val h0 = hs.getLong(x)
+      val h0 = long(hs, x)
       var i = 0
       while (i < numHashes) {
         var z = h0 + 0x9E3779B97F4A7C15L * (i + 1)
@@ -65,4 +68,29 @@ object LshHash {
     }
     UnsafeArrayData.fromPrimitiveArray(mins)
   }
+
+  /** Jaccard similarity of two sorted distinct long arrays by
+    * merge-count; empty vs empty (union 0) is 1.0. A null element reads
+    * as 0. */
+  def jaccardSorted(x: ArrayData, y: ArrayData): Double = {
+    val na = x.numElements()
+    val nb = y.numElements()
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < na && j < nb) {
+      val xv = long(x, i)
+      val yv = long(y, j)
+      if (xv == yv) { inter += 1; i += 1; j += 1 }
+      else if (xv < yv) i += 1
+      else j += 1
+    }
+    val union = na + nb - inter
+    if (union == 0) 1.0 else inter.toDouble / union
+  }
+
+  /** Element i, a null element reading as 0 whatever the array's
+    * physical form (see [[VecKernels.at]]). */
+  private def long(a: ArrayData, i: Int): Long =
+    if (a.isNullAt(i)) 0L else a.getLong(i)
 }

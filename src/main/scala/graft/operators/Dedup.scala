@@ -398,17 +398,6 @@ object Dedup {
     contaminatedAgainstGrams(corpus,
       evalGramSet(benchmark, textCol, n), textCol, idCol, n, fpp)
 
-  /** [[decontaminate]] with the Bloom screen: conservative (may drop a
-    * false-positive doc at ≤ fpp per gram) but never leaks — the flag
-    * set is a superset of the exact pass's. */
-  def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame,
-      textCol: String, idCol: String, n: Int = 13,
-      fpp: Double = 0.001): DataFrame = {
-    val input = graft.core.CacheScope.retainInput(corpus)
-    input.join(contaminatedDocsBloom(input, benchmark, textCol, idCol, n, fpp)
-      .select(idCol), Seq(idCol), "left_anti")
-  }
-
   /** 64-bit SimHash of the token multiset: per bit, sign of Σ(±1) over
     * token hashes. Token hashing stays a codegen'd expression (xxhash64);
     * the 64-bit accumulation is one compact UDF over the hash array

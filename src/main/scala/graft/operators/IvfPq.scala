@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Quantizer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,18 +49,10 @@ object IvfPq {
     val centroids = Similarity.lloyd(sample, math.min(eff, sample.length),
       seed, maxIter)
     // residuals of the SAME sample under the just-fitted coarse
-    // quantizer (assignment is the lloyd nearest rule: strict <, first
-    // index wins — identical to NearestCellsExpr)
+    // quantizer, assigned by the kernel lloyd and NearestCellsExpr share
+    val dist = new Array[Double](centroids.length)
     val residuals = sample.map { v =>
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < centroids.length) {
-        val ctr = centroids(c); var d = 0.0; var i = 0
-        val n = math.min(ctr.length, v.length)
-        while (i < n) { val t = v(i) - ctr(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      val ctr = centroids(best)
+      val ctr = centroids(Quantizer.nearest(v, 0, centroids, dist))
       Array.tabulate(v.length)(i => v(i) - ctr(i))
     }
     val dsub = dim / m

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Quantizer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -530,24 +531,14 @@ object Similarity {
     val rnd = new scala.util.Random(seed)
     val centroids = rnd.shuffle(sample.indices.toVector).take(k)
       .map(i => sample(i).clone).toArray
-    def nearest(v: Array[Double]): Int = {
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < k) {
-        val ctr = centroids(c); var d = 0.0; var i = 0
-        val m = math.min(ctr.length, v.length)
-        while (i < m) { val t = v(i) - ctr(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
+    val dist = new Array[Double](k)
     var iter = 0
     while (iter < maxIter) {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Long](k)
       var r = 0
       while (r < sample.length) {
-        val v = sample(r); val c = nearest(v)
+        val v = sample(r); val c = Quantizer.nearest(v, 0, centroids, dist)
         val s = sums(c); var i = 0
         val m = math.min(dim, v.length)
         while (i < m) { s(i) += v(i); i += 1 }

@@ -105,10 +105,12 @@ object ZOrder {
     * quadrant seams), so range partitions are tighter boxes and a box
     * query intersects fewer files. The classic xy2d bit walk (Hilbert
     * 1891; the iterative form popularized by Warren's Hacker's Delight)
-    * unrolls into `bits` levels of named integer columns — codegen'd
-    * map-side arithmetic, no UDF, and the gate oracle replays the same
-    * unrolled levels as chained CTEs. Values outside [0, 2^bits) raise,
-    * same contract as [[zValue]]. */
+    * runs as one native expression, `hilbert_xy2d`: a `bits`-iteration
+    * exact 64-bit integer loop per row ([[graft.functions.Hilbert.xy2d]])
+    * inside whole-stage codegen, no UDF. The gate oracle replays the
+    * same levels as chained CTEs, and ZOrderSpec pins golden values and
+    * the adjacency property. Values outside [0, 2^bits) raise, same
+    * contract as [[zValue]]. */
   def hilbertValue(df: DataFrame, xCol: String, yCol: String, bits: Int,
       out: String = "h_value"): DataFrame = {
     require(bits >= 1 && 2 * bits <= 62,
@@ -121,16 +123,6 @@ object ZOrder {
           lc.cast("string"))))
         .otherwise(lc)
     }
-    // Native codegen'd bit walk (GraftExtensions.HilbertXy2dExpr): one
-    // `bits`-iteration integer loop per row. The previous form unrolled
-    // the recurrence as `bits` chained Projects of nested CASE trees —
-    // linear Catalyst tree, but still seconds of analysis per query and
-    // a generated body far past JIT-friendly size on a corpus-scale
-    // scan (an aggregate() fold before THAT ran interpreted, ~11 s at
-    // sf0.1). The loop performs the identical exact 64-bit arithmetic
-    // in the identical order, so the h values — and the unrolled-CTE
-    // SQL oracle replay — are bit-for-bit unchanged (ZOrderSpec pins
-    // golden values and the adjacency property).
     graft.plans.GraftExtensions.register(df.sparkSession)
     df.withColumn(out,
       graft.plans.GraftExtensions.hilbertXy2d(guard(col(xCol)), guard(col(yCol)), bits))

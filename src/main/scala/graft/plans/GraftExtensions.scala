@@ -10,14 +10,21 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 
+// graft's native Catalyst expressions. Each one's row arithmetic lives in
+// one static kernel in `graft.functions` (VecKernels, Quantizer, LshHash,
+// GramHash, UnitVec, WinnowKernel, Hilbert, UnicodeNorm, Robots). Its
+// `eval` and its one-line `doGenCode` call that same method, so the
+// interpreted and the compiled path cannot diverge; matrix state reaches
+// generated code through `ctx.addReferenceObj`.
+
 /** Native Catalyst expression for cosine similarity of two double-array
   * columns — the custom-Expression tier of the extension ladder
   * (SURVEY.md §7.1: compose built-ins where possible, drop to a codegen
   * `Expression` where the built-ins interpret per element). The
   * higher-order-function formulation (`aggregate(zip_with(...))`)
   * evaluates its lambda per element on every row; a Scala UDF boxes both
-  * arrays per call. This expression generates a single fused Java loop
-  * over the unsafe array data inside whole-stage codegen.
+  * arrays per call. This expression runs one loop over the array data
+  * ([[graft.functions.VecKernels.cosine]]) inside whole-stage codegen.
   */
 case class CosineSimExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -35,47 +42,11 @@ case class CosineSimExpr(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var nx = 0.0
-    var ny = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getDouble(i)
-      val yi = y.getDouble(i)
-      dot += xi * yi
-      nx += xi * xi
-      ny += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    graft.functions.VecKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.getDouble($i);
-         |  double $y = $b.getDouble($i);
-         |  $dot += $x * $y;
-         |  $nx += $x * $x;
-         |  $ny += $y * $y;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.VecKernels.cosine($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimExpr =
@@ -86,8 +57,8 @@ case class CosineSimExpr(left: Expression, right: Expression)
   * every ANN path (brute force, LSH, IVF) and the SemDeDup pair scan,
   * which score pre-normalized unit vectors where cosine degenerates to
   * the dot. The Scala UDF form boxes both arrays into Seq[Double] per
-  * candidate PAIR (the quadratic term); this expression is one fused
-  * loop over the unsafe array data inside whole-stage codegen, summing
+  * candidate PAIR (the quadratic term); this expression is one loop
+  * ([[graft.functions.VecKernels.dot]]) inside whole-stage codegen, summing
   * in the same index order as the UDF it replaces — results are
   * bit-identical, so the embedded-constant oracles are unaffected. */
 case class DotArrExpr(left: Expression, right: Expression)
@@ -106,30 +77,11 @@ case class DotArrExpr(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_arr"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var i = 0
-    while (i < n) { dot += x.getDouble(i) * y.getDouble(i); i += 1 }
-    dot
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    graft.functions.VecKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.VecKernels.dot($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotArrExpr =
@@ -160,40 +112,11 @@ case class BucketCountsExpr(child: Expression, dim: Int)
     ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "bucket_counts"
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val counts = new Array[Double](dim)
-    var j = 0
-    val n = xs.numElements()
-    while (j < n) {
-      if (!xs.isNullAt(j)) {
-        val v = xs.getLong(j)
-        if (v >= 0L && v < dim) counts(v.toInt) += 1.0
-      }
-      j += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(counts)
-  }
+  override protected def nullSafeEval(a: Any): Any =
+    graft.functions.GramHash.bucketCounts(a.asInstanceOf[ArrayData], dim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val v = ctx.freshName("v")
-      val counts = ctx.freshName("counts")
-      s"""
-         |int $n = $a.numElements();
-         |double[] $counts = new double[$dim];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if (!$a.isNullAt($j)) {
-         |    long $v = $a.getLong($j);
-         |    if ($v >= 0L && $v < ${dim}L) $counts[(int) $v] += 1.0;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($counts);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.GramHash.bucketCounts($a, $dim);")
 
   override protected def withNewChildInternal(newChild: Expression): BucketCountsExpr =
     copy(child = newChild)
@@ -388,15 +311,13 @@ case class WinnowFpExpr(child: Expression, k: Int, w: Int)
 }
 
 /** Hilbert curve index (2-D xy→d bit walk) of two non-negative long
-  * columns — the native form of the recurrence
-  * [[graft.operators.ZOrder.hilbertValue]] previously unrolled as `bits`
-  * chained Projects of nested CASE trees. That unrolled form kept the
-  * Catalyst tree linear, but 16 stacked Projects still cost seconds of
-  * analysis per query and produce a whole-stage-codegen body far past
-  * JIT-friendly size over a corpus-scale scan; this expression is one
-  * `bits`-iteration integer loop — identical arithmetic, identical
-  * integers (every step is exact 64-bit ops in the same order), so the
-  * unrolled-CTE SQL oracle replay is unaffected. */
+  * columns, for [[graft.operators.ZOrder.hilbertValue]]: one
+  * `bits`-iteration exact 64-bit integer loop per row
+  * ([[graft.functions.Hilbert.xy2d]]). Unrolled as `bits` chained
+  * Projects of CASE trees, the same walk costs seconds of analysis per
+  * query and a generated body far past JIT-friendly size; the loop does
+  * the same integer steps in the same order, so the unrolled-CTE SQL
+  * oracle replays it exactly. */
 case class HilbertXy2dExpr(left: Expression, right: Expression, bits: Int)
     extends BinaryExpression {
   require(bits >= 1 && 2 * bits <= 62,
@@ -415,50 +336,12 @@ case class HilbertXy2dExpr(left: Expression, right: Expression, bits: Int)
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def prettyName: String = "hilbert_xy2d"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    var x = a.asInstanceOf[Long]
-    var y = b.asInstanceOf[Long]
-    val n1 = (1L << bits) - 1L
-    var h = 0L
-    var i = bits - 1
-    while (i >= 0) {
-      val s = 1L << i
-      val rx = if ((x & s) > 0L) 1L else 0L
-      val ry = if ((y & s) > 0L) 1L else 0L
-      h += (s * s) * ((3L * rx) ^ ry)
-      if (ry == 0L) {
-        val nx = if (rx == 1L) n1 - y else y
-        val ny = if (rx == 1L) n1 - x else x
-        x = nx; y = ny
-      }
-      i -= 1
-    }
-    h
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    graft.functions.Hilbert.xy2d(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val h = ctx.freshName("h"); val i = ctx.freshName("i")
-      val s = ctx.freshName("s"); val rx = ctx.freshName("rx")
-      val ry = ctx.freshName("ry"); val nx = ctx.freshName("nx")
-      val n1 = (1L << bits) - 1L
-      s"""
-         |long $x = $a; long $y = $b; long $h = 0L;
-         |for (int $i = $bits - 1; $i >= 0; $i--) {
-         |  long $s = 1L << $i;
-         |  long $rx = (($x & $s) > 0L) ? 1L : 0L;
-         |  long $ry = (($y & $s) > 0L) ? 1L : 0L;
-         |  $h += ($s * $s) * ((3L * $rx) ^ $ry);
-         |  if ($ry == 0L) {
-         |    long $nx = ($rx == 1L) ? (${n1}L - $y) : $y;
-         |    $y = ($rx == 1L) ? (${n1}L - $x) : $x;
-         |    $x = $nx;
-         |  }
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.Hilbert.xy2d($a, $b, $bits);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HilbertXy2dExpr =
@@ -484,49 +367,12 @@ case class JaccardSortedExpr(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "jaccard_sorted"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val na = x.numElements()
-    val nb = y.numElements()
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val xv = x.getLong(i)
-      val yv = y.getLong(j)
-      if (xv == yv) { inter += 1; i += 1; j += 1 }
-      else if (xv < yv) i += 1
-      else j += 1
-    }
-    val union = na + nb - inter
-    if (union == 0) 1.0 else inter.toDouble / union
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    graft.functions.LshHash.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val inter = ctx.freshName("inter")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val union = ctx.freshName("union")
-      s"""
-         |int $na = $a.numElements(), $nb = $b.numElements();
-         |int $i = 0, $j = 0, $inter = 0;
-         |while ($i < $na && $j < $nb) {
-         |  long $xv = $a.getLong($i);
-         |  long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $inter++; $i++; $j++; }
-         |  else if ($xv < $yv) $i++;
-         |  else $j++;
-         |}
-         |int $union = $na + $nb - $inter;
-         |${ev.value} = $union == 0 ? 1.0 : ((double) $inter) / $union;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.LshHash.jaccardSorted($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaccardSortedExpr =
@@ -561,46 +407,14 @@ case class HyperplaneSketchExpr(child: Expression,
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def prettyName: String = "hyperplane_sketch"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val planes = planeArr
-    var sig = 0L
-    var p = 0
-    while (p < planes.length) {
-      val pl = planes(p)
-      var dot = 0.0
-      var d = 0
-      val n = math.min(pl.length, v.numElements())
-      while (d < n) { dot += v.getDouble(d) * pl(d); d += 1 }
-      if (dot > 0) sig |= (1L << p)
-      p += 1
-    }
-    sig
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    graft.functions.VecKernels.hyperplaneSketch(input.asInstanceOf[ArrayData], planeArr)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val pls = ctx.addReferenceObj("planes", planeArr, "double[][]")
-      val sig = ctx.freshName("sig")
-      val p = ctx.freshName("p")
-      val d = ctx.freshName("d")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val pl = ctx.freshName("pl")
-      s"""
-         |long $sig = 0L;
-         |for (int $p = 0; $p < $pls.length; $p++) {
-         |  double[] $pl = $pls[$p];
-         |  double $dot = 0.0;
-         |  int $n = java.lang.Math.min($pl.length, $v.numElements());
-         |  for (int $d = 0; $d < $n; $d++) {
-         |    $dot += $v.getDouble($d) * $pl[$d];
-         |  }
-         |  if ($dot > 0) $sig |= (1L << $p);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val pls = ctx.addReferenceObj("planes", planeArr, "double[][]")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.VecKernels.hyperplaneSketch($v, $pls);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneSketchExpr =
     copy(child = newChild)
@@ -611,7 +425,9 @@ case class HyperplaneSketchExpr(child: Expression,
   * cell indices ordered by ascending squared distance, ties to the
   * lower index — EXACTLY the stable `sortBy(distance).take(k)` of the
   * UDF it replaces (successive strict-minimum selection reproduces a
-  * stable ascending order). */
+  * stable ascending order; [[graft.functions.Quantizer.nearestCells]]).
+  * A row whose distances are all NaN or +Inf (a NaN element) gets the
+  * lowest-index cells. */
 case class NearestCellsExpr(child: Expression,
     centroids: Seq[Seq[Double]], k: Int)
     extends UnaryExpression {
@@ -627,83 +443,15 @@ case class NearestCellsExpr(child: Expression,
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
   override def prettyName: String = "nearest_cells"
-  private val kk = math.min(k, centroids.length)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val centroids = centroidArr
-    val n = centroids.length
-    val dist = new Array[Double](n)
-    var c = 0
-    while (c < n) {
-      val ctr = centroids(c)
-      var s = 0.0
-      var i = 0
-      val m = math.min(ctr.length, v.numElements())
-      while (i < m) { val t = v.getDouble(i) - ctr(i); s += t * t; i += 1 }
-      dist(c) = s
-      c += 1
-    }
-    val out = new Array[Int](kk)
-    val used = new Array[Boolean](n)
-    var j = 0
-    while (j < kk) {
-      var best = -1
-      var bestD = Double.MaxValue
-      var c2 = 0
-      while (c2 < n) {
-        if (!used(c2) && dist(c2) < bestD) { bestD = dist(c2); best = c2 }
-        c2 += 1
-      }
-      used(best) = true
-      out(j) = best
-      j += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+  override protected def nullSafeEval(input: Any): Any =
+    graft.functions.Quantizer.nearestCells(input.asInstanceOf[ArrayData], centroidArr, k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ctrs = ctx.addReferenceObj("centroids", centroidArr, "double[][]")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.Quantizer.nearestCells($v, $ctrs, $k);")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val ctrs = ctx.addReferenceObj("centroids", centroidArr, "double[][]")
-      val dist = ctx.freshName("dist")
-      val used = ctx.freshName("used")
-      val out = ctx.freshName("out")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val s = ctx.freshName("s")
-      val t = ctx.freshName("t")
-      val j = ctx.freshName("j")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val c2 = ctx.freshName("c2")
-      val ctr = ctx.freshName("ctr")
-      s"""
-         |double[] $dist = new double[$ctrs.length];
-         |for (int $c = 0; $c < $ctrs.length; $c++) {
-         |  double[] $ctr = $ctrs[$c];
-         |  double $s = 0.0;
-         |  int $m = java.lang.Math.min($ctr.length, $v.numElements());
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    double $t = $v.getDouble($i) - $ctr[$i];
-         |    $s += $t * $t;
-         |  }
-         |  $dist[$c] = $s;
-         |}
-         |boolean[] $used = new boolean[$ctrs.length];
-         |int[] $out = new int[$kk];
-         |for (int $j = 0; $j < $kk; $j++) {
-         |  int $best = -1;
-         |  double $bestD = Double.MAX_VALUE;
-         |  for (int $c2 = 0; $c2 < $ctrs.length; $c2++) {
-         |    if (!$used[$c2] && $dist[$c2] < $bestD) { $bestD = $dist[$c2]; $best = $c2; }
-         |  }
-         |  $used[$best] = true;
-         |  $out[$j] = $best;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): NearestCellsExpr =
     copy(child = newChild)
@@ -713,7 +461,8 @@ case class NearestCellsExpr(child: Expression,
   * Schmid 2011, "Product quantization for nearest neighbor search",
   * IEEE TPAMI). Subspace s covers dims [s·dsub, (s+1)·dsub); output is
   * the m-code array. Same first-index-wins tie rule and index-order
-  * squared-L2 accumulation as [[NearestCellsExpr]] — the q_similarity_pq
+  * squared-L2 accumulation as [[NearestCellsExpr]] (one kernel,
+  * [[graft.functions.Quantizer]]) — the q_similarity_pq
   * oracle replays both choices exactly. `books` is Seq-shaped (not
   * Array) so equal-codebook expressions compare equal for CSE. */
 case class PqEncodeExpr(child: Expression,
@@ -732,66 +481,13 @@ case class PqEncodeExpr(child: Expression,
     ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val bs = bookArr
-    val out = new Array[Int](bs.length)
-    var s = 0
-    while (s < bs.length) {
-      val book = bs(s)
-      val off = s * book(0).length
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < book.length) {
-        val ctr = book(c); var d = 0.0; var i = 0
-        val m = math.min(ctr.length, math.max(0, v.numElements() - off))
-        while (i < m) { val t = v.getDouble(off + i) - ctr(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      out(s) = best
-      s += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    graft.functions.Quantizer.pqEncode(input.asInstanceOf[ArrayData], bookArr)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val bs = ctx.addReferenceObj("books", bookArr, "double[][][]")
-      val out = ctx.freshName("out")
-      val s = ctx.freshName("s")
-      val book = ctx.freshName("book")
-      val off = ctx.freshName("off")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val c = ctx.freshName("c")
-      val ctr = ctx.freshName("ctr")
-      val d = ctx.freshName("d")
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val t = ctx.freshName("t")
-      s"""
-         |int[] $out = new int[$bs.length];
-         |for (int $s = 0; $s < $bs.length; $s++) {
-         |  double[][] $book = $bs[$s];
-         |  int $off = $s * $book[0].length;
-         |  int $best = 0;
-         |  double $bestD = Double.MAX_VALUE;
-         |  for (int $c = 0; $c < $book.length; $c++) {
-         |    double[] $ctr = $book[$c];
-         |    double $d = 0.0;
-         |    int $m = java.lang.Math.min($ctr.length,
-         |      java.lang.Math.max(0, $v.numElements() - $off));
-         |    for (int $i = 0; $i < $m; $i++) {
-         |      double $t = $v.getDouble($off + $i) - $ctr[$i];
-         |      $d += $t * $t;
-         |    }
-         |    if ($d < $bestD) { $bestD = $d; $best = $c; }
-         |  }
-         |  $out[$s] = $best;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bs = ctx.addReferenceObj("books", bookArr, "double[][][]")
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = graft.functions.Quantizer.pqEncode($v, $bs);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =
     copy(child = newChild)
@@ -817,63 +513,13 @@ case class PqLutExpr(child: Expression,
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "pq_lut"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val bs = bookArr
-    val ksub = bs(0).length
-    val out = new Array[Double](bs.length * ksub)
-    var s = 0
-    while (s < bs.length) {
-      val book = bs(s)
-      val off = s * book(0).length
-      var c = 0
-      while (c < book.length) {
-        val ctr = book(c); var d = 0.0; var i = 0
-        val m = math.min(ctr.length, math.max(0, v.numElements() - off))
-        while (i < m) { val t = v.getDouble(off + i) - ctr(i); d += t * t; i += 1 }
-        out(s * ksub + c) = d
-        c += 1
-      }
-      s += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    graft.functions.Quantizer.pqLut(input.asInstanceOf[ArrayData], bookArr)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val bs = ctx.addReferenceObj("books", bookArr, "double[][][]")
-      val out = ctx.freshName("out")
-      val ksub = ctx.freshName("ksub")
-      val s = ctx.freshName("s")
-      val book = ctx.freshName("book")
-      val off = ctx.freshName("off")
-      val c = ctx.freshName("c")
-      val ctr = ctx.freshName("ctr")
-      val d = ctx.freshName("d")
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val t = ctx.freshName("t")
-      s"""
-         |int $ksub = $bs[0].length;
-         |double[] $out = new double[$bs.length * $ksub];
-         |for (int $s = 0; $s < $bs.length; $s++) {
-         |  double[][] $book = $bs[$s];
-         |  int $off = $s * $book[0].length;
-         |  for (int $c = 0; $c < $book.length; $c++) {
-         |    double[] $ctr = $book[$c];
-         |    double $d = 0.0;
-         |    int $m = java.lang.Math.min($ctr.length,
-         |      java.lang.Math.max(0, $v.numElements() - $off));
-         |    for (int $i = 0; $i < $m; $i++) {
-         |      double $t = $v.getDouble($off + $i) - $ctr[$i];
-         |      $d += $t * $t;
-         |    }
-         |    $out[$s * $ksub + $c] = $d;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bs = ctx.addReferenceObj("books", bookArr, "double[][][]")
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = graft.functions.Quantizer.pqLut($v, $bs);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): PqLutExpr =
     copy(child = newChild)
@@ -895,34 +541,12 @@ case class SignPackExpr(child: Expression, dim: Int)
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
   override def prettyName: String = "sign_pack"
-  private val nwords = (dim + 63) / 64
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val out = new Array[Long](nwords)
-    val n = math.min(dim, v.numElements())
-    var i = 0
-    while (i < n) {
-      if (v.getDouble(i) >= 0.0) out(i >>> 6) |= (1L << (i & 63))
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    graft.functions.VecKernels.signPack(input.asInstanceOf[ArrayData], dim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      s"""
-         |long[] $out = new long[$nwords];
-         |int $n = java.lang.Math.min($dim, $v.numElements());
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($v.getDouble($i) >= 0.0) $out[$i >>> 6] |= (1L << ($i & 63));
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = graft.functions.VecKernels.signPack($v, $dim);")
 
   override protected def withNewChildInternal(newChild: Expression): SignPackExpr =
     copy(child = newChild)
@@ -945,34 +569,12 @@ case class PqAdcExpr(left: Expression, right: Expression, ksub: Int)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_adc"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val lut = b.asInstanceOf[ArrayData]
-    var d = 0.0
-    var s = 0
-    val m = codes.numElements()
-    while (s < m) {
-      val idx = s * ksub + codes.getInt(s)
-      if (idx < lut.numElements()) d += lut.getDouble(idx)
-      s += 1
-    }
-    d
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    graft.functions.Quantizer.pqAdc(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], ksub)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val d = ctx.freshName("d")
-      val s = ctx.freshName("s")
-      val idx = ctx.freshName("idx")
-      s"""
-         |double $d = 0.0;
-         |for (int $s = 0; $s < $a.numElements(); $s++) {
-         |  int $idx = $s * $ksub + $a.getInt($s);
-         |  if ($idx < $b.numElements()) $d += $b.getDouble($idx);
-         |}
-         |${ev.value} = $d;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.Quantizer.pqAdc($a, $b, $ksub);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdcExpr =
@@ -1011,25 +613,13 @@ case class UnicodeNormalizeExpr(child: Expression, form: String)
 
   @transient private lazy val normForm = java.text.Normalizer.Form.valueOf(form)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val u = input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-    val s = u.toString
-    if (java.text.Normalizer.isNormalized(s, normForm)) u
-    else org.apache.spark.unsafe.types.UTF8String.fromString(
-      java.text.Normalizer.normalize(s, normForm))
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    graft.functions.UnicodeNorm.normalize(
+      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], normForm)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val s = ctx.freshName("s")
-      s"""
-         |java.lang.String $s = $v.toString();
-         |${ev.value} = java.text.Normalizer.isNormalized($s, java.text.Normalizer.Form.$form)
-         |  ? $v
-         |  : org.apache.spark.unsafe.types.UTF8String.fromString(
-         |      java.text.Normalizer.normalize($s, java.text.Normalizer.Form.$form));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.UnicodeNorm.normalize($v, java.text.Normalizer.Form.$form);")
 
   override protected def withNewChildInternal(newChild: Expression): UnicodeNormalizeExpr =
     copy(child = newChild)
@@ -1088,14 +678,8 @@ case class RobotsAllowedExpr(left: Expression, right: Expression,
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * or `GraftExtensions.register(spark)` on a live session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.cosineSimDescriptor)
-    ext.injectFunction(GraftExtensions.jaccardSortedDescriptor)
-    ext.injectFunction(GraftExtensions.dotArrDescriptor)
-    ext.injectFunction(GraftExtensions.unicodeNormDescriptor)
-    ext.injectFunction(GraftExtensions.robotsAllowedDescriptor)
-    ext.injectFunction(GraftExtensions.hilbertXy2dDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.descriptors.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
@@ -1170,6 +754,12 @@ object GraftExtensions {
       RobotsAllowedExpr(children.head, children(1), agent)
     })
 
+  /** Every SQL-registered function: the one list both the extensions
+    * entry point and [[register]] install. */
+  private[graft] val descriptors = Seq(cosineSimDescriptor,
+    jaccardSortedDescriptor, dotArrDescriptor, unicodeNormDescriptor,
+    robotsAllowedDescriptor, hilbertXy2dDescriptor)
+
   /** Column-level accessors — resolve through the function registry, so
     * `register(spark)` (or the extensions config) must have run. */
   def cosineSim(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -1184,11 +774,8 @@ object GraftExtensions {
       org.apache.spark.sql.functions.lit(bits))
 
   /** Register on an already-built session (local/test convenience). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(cosineSimDescriptor, jaccardSortedDescriptor, dotArrDescriptor,
-        unicodeNormDescriptor, robotsAllowedDescriptor,
-        hilbertXy2dDescriptor).foreach { d =>
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    descriptors.foreach { d =>
       spark.sessionState.functionRegistry.registerFunction(d._1, d._2, d._3)
     }
-  }
 }

@@ -58,7 +58,4 @@ object Sinks {
       .mode("overwrite")
       .saveAsTable(tableName)
   }
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 }

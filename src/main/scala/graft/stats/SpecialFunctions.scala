@@ -76,9 +76,6 @@ object SpecialFunctions {
   def erfc(x: Double): Double =
     if (x < 0) 2.0 - erfc(-x) else regGammaQ(0.5, x * x)
 
-  /** Standard normal upper-tail probability. */
-  def pnormUpper(z: Double): Double = 0.5 * erfc(z / Sqrt2)
-
   /** Normal CDF with mean/sd, selectable tail (R pnorm). */
   def pnorm(x: Double, mean: Double, sd: Double, lowerTail: Boolean): Double = {
     val z = (x - mean) / sd

@@ -409,27 +409,6 @@ object CurationStream {
     evalIndex.decontaminate(scrubbed, textCol, idCol, evalBloomFpp)
   }
 
-  /** [[startScreenIndexed]] with the eval set index-served
-    * ([[screenAllIndexed]] per micro-batch). */
-  def startScreenAllIndexed(stream: DataFrame,
-      index: graft.operators.LshIndex.LshIndex,
-      evalIndex: graft.operators.EvalIndex.EvalIndex,
-      sink: DataFrame => Unit,
-      textCol: String = "text", idCol: String = "doc_id",
-      checkpointDir: String, trigger: Trigger = Trigger.AvailableNow(),
-      model: Option[graft.operators.QualityClassifier.Model] = None,
-      minModelScore: Double = 0.5, evalBloomFpp: Double = 0.0,
-      extraGate: Option[Column] = None): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(screenAllIndexed(batch, index, evalIndex, textCol, idCol,
-          model = model, minModelScore = minModelScore,
-          evalBloomFpp = evalBloomFpp, extraGate = extraGate))
-      }
-      .trigger(trigger)
-      .start()
-
   /** [[startScreenV2FullyIndexed]] with the eval set index-served
     * ([[screenV2AllIndexed]] per micro-batch): the production v2
     * ingestion entry point — every batch plan is gates + joins/probes

@@ -84,7 +84,7 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(!plan.contains("ScalaUDF"), plan)
   }
 
-  test("hyperplane_sketch / nearest_cells: codegen == interpreted eval, stable ties") {
+  test("hyperplane_sketch sign bits, nearest_cells stable ties") {
     import org.apache.spark.sql.GraftColumnBridge
     import graft.plans.{HyperplaneSketchExpr, NearestCellsExpr}
     val planes = Seq(Seq(1.0, 0.0), Seq(-1.0, 0.5), Seq(0.0, -1.0))
